@@ -484,9 +484,14 @@ object TextAnalysis {
    * EACH MAPPER before the shuffle, so a 100M-page host costs the
    * shuffle k rows, not 100M (a rank window would sort whole host
    * partitions; the hot-host skew is exactly where that dies).
+   *
+   * The id is folded into avalanche31's 31-bit-safe domain first
+   * (`pmod(id, 2^31)`, as `split_assign` does): a raw 64-bit id
+   * overflows the hash's first multiply, which Spark wraps silently and
+   * DuckDB rejects. Ids below 2^31 hash exactly as before.
    */
   def hostCap(docs: DataFrame, urlCol: String, idCol: String, k: Int): DataFrame = {
-    val h = Clump.avalanche31(col(idCol).cast("long"))
+    val h = Clump.avalanche31(pmod(col(idCol).cast("long"), lit(2147483648L)))
     docs.select(
         regexp_extract(col(urlCol), "^https?://([^/?#]+)", 1).as("host"),
         h.as("__h"), col(idCol).cast("long").as("doc_id"))
@@ -505,7 +510,8 @@ object TextAnalysis {
        |    doc_id,
        |    ROW_NUMBER() OVER (
        |      PARTITION BY regexp_extract(url, '^https?://([^/?#]+)', 1)
-       |      ORDER BY ${Clump.avalanche31Sql("doc_id")}, doc_id) AS rnk
+       |      ORDER BY ${Clump.avalanche31Sql("((doc_id % 2147483648 + 2147483648) % 2147483648)")},
+       |        doc_id) AS rnk
        |  FROM $rel) WHERE rnk <= $k""".stripMargin
 
   /**

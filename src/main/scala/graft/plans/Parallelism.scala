@@ -13,6 +13,14 @@ import org.apache.spark.sql.{Column, DataFrame}
  * (session-derived, never a constant) and sources already wider pass
  * through untouched — at warehouse scale the condition is simply false
  * and the operator plans exactly as before.
+ *
+ * Operators apply it, never sources: `floor` plans its input to count
+ * the splits, and the repartition adds an exchange, which pays only
+ * where the per-row work after it is heavy (the tfidf, vocab, bigram
+ * and BPE text operators). A source applying it would plan at build
+ * time and add the exchange to every query built on it, including the
+ * light chains (cell encode, PIP assign, md5) where it costs more than
+ * it gains.
  */
 object Parallelism {
 

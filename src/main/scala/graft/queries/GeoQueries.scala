@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.core.GridMeta
 import graft.functions._
 import graft.operators.{KNN, Warp}
-import graft.sources.{OracleLit, Pages, RasterStack}
+import graft.sources.{OracleLit, Pages, RasterStack, Tables}
 
 /**
  * Oracle-checked queries for the kNN join, to_crs warp, GeoDist and
@@ -147,7 +147,7 @@ object GeoQueries {
     // grid absorbs it away from quantization boundaries.
     "q48_aspect" -> ((s, dir) => {
       val deg = (col("doc_id") % 360L).cast("double")
-      s.read.parquet(s"$dir/documents.parquet")
+      Tables.read(s, dir, "documents")
         .select(col("doc_id"),
           floor(aspect_easting(deg) * 1e9).as("east_q"),
           floor(aspect_northing(deg) * 1e9).as("north_q"))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Dedup, Multimodal, Similarity, TextAnalysis}
+import graft.sources.Tables
 
 /**
  * Training-data pipeline queries (first-class engine components per the
@@ -18,7 +19,7 @@ object PipelineQueries {
 
   /** Corpus with planted EXACT duplicates (ids shifted by 100000). */
   private def corpusExact(s: SparkSession, dir: String): DataFrame = {
-    val d = s.read.parquet(s"$dir/documents.parquet").select("doc_id", "text")
+    val d = docs(s, dir).select("doc_id", "text")
     d.unionByName(d.where(col("doc_id") % 10 === 0)
       .withColumn("doc_id", col("doc_id") + 100000L))
   }
@@ -28,7 +29,7 @@ object PipelineQueries {
 
   /** Corpus with planted NEAR duplicates (three extra tokens appended). */
   private def corpusNear(s: SparkSession, dir: String): DataFrame = {
-    val d = s.read.parquet(s"$dir/documents.parquet").select("doc_id", "text")
+    val d = docs(s, dir).select("doc_id", "text")
     d.unionByName(d.where(col("doc_id") % 10 === 0)
       .withColumn("doc_id", col("doc_id") + 100000L)
       .withColumn("text", concat(col("text"), lit(" graft dup marker"))))
@@ -40,7 +41,7 @@ object PipelineQueries {
   /** corpusNear plus 500 byte-identical clones of doc 0's text (the
     * boilerplate cluster that exercises the exact-dup pre-collapse). */
   private def corpusBoiler(s: SparkSession, dir: String): DataFrame = {
-    val d = s.read.parquet(s"$dir/documents.parquet").select("doc_id", "text")
+    val d = docs(s, dir).select("doc_id", "text")
     // clone ids ride an explode over the ONE matching row — the
     // range-crossJoin form paid a BroadcastNestedLoopJoin build job
     // per corpus evaluation (and the corpus evaluates twice: the
@@ -57,9 +58,9 @@ object PipelineQueries {
        | FROM range(0, 500) t(i))""".stripMargin
 
   private def docs(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"$dir/documents.parquet")
+    Tables.read(s, dir, "documents")
   private def vecs(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"$dir/embeddings.parquet")
+    Tables.read(s, dir, "embeddings")
 
   /**
    * Embeddings with planted NEAR-DUPLICATE vectors: every 10th vector is

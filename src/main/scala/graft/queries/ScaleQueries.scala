@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.core.GridMeta
 import graft.functions._
 import graft.operators.SpatialJoin
-import graft.sources.{Fixtures, Pages}
+import graft.sources.{Fixtures, Pages, Tables}
 
 /**
  * Scale-sensitive queries: the north-rule pipeline keyed off `lineitem`
@@ -27,7 +27,7 @@ object ScaleQueries {
 
   private def points(s: SparkSession, dir: String): DataFrame =
     Pages.withIdPoint(
-      s.read.parquet(s"$dir/lineitem.parquet")
+      Tables.read(s, dir, "lineitem")
         .select(key.as("k"), col("l_quantity")), "k")
 
   private val pointsSql =
@@ -53,7 +53,7 @@ object ScaleQueries {
     // are order-dependent doubles, excluded by the oracle rule).
     "q47_window_tiles" -> ((s, dir) => {
       graft.streaming.StreamTiles.windowedTileCounts(
-          s.read.parquet(s"$dir/events.parquet"), "ts", "event_id", G, res = 8)
+          Tables.read(s, dir, "events"), "ts", "event_id", G, res = 8)
         .select(col("window.start").cast("long").as("ws"), col("tile"), col("n_events"))
     }),
 
@@ -63,7 +63,7 @@ object ScaleQueries {
     // to a SQL oracle (StreamingSpec separately proves batch ≡ stream).
     "q55_first_k_per_tile" -> ((s, dir) => {
       graft.streaming.StreamTiles.firstKPerTile(
-          s.read.parquet(s"$dir/events.parquet"), "ts", "event_id", G, res = 8, k = 5)
+          Tables.read(s, dir, "events"), "ts", "event_id", G, res = 8, k = 5)
         .toDF().select("tile", "id", "arrival_rank")
     }),
 
@@ -75,7 +75,7 @@ object ScaleQueries {
     // under inverted micro-batch arrival order).
     "q77_firstk_eventtime" -> ((s, dir) => {
       graft.streaming.StreamTiles.firstKPerTileEventTime(
-          s.read.parquet(s"$dir/events.parquet"), "ts", "event_id", G, res = 8, k = 5)
+          Tables.read(s, dir, "events"), "ts", "event_id", G, res = 8, k = 5)
         .toDF().select("tile", "id", "arrival_rank")
     }),
 
@@ -87,7 +87,7 @@ object ScaleQueries {
     // genuinely differs from min-id and the (ts, id) packing is
     // exercised.
     "q60_stream_dedup" -> ((s, dir) => {
-      val d = s.read.parquet(s"$dir/documents.parquet").select("doc_id", "text")
+      val d = Tables.read(s, dir, "documents").select("doc_id", "text")
       val planted = d.unionByName(d.where(col("doc_id") % 10 === 0)
         .withColumn("doc_id", col("doc_id") + 100000L))
         .withColumn("ts", timestamp_seconds(lit(1577836800L) + pmod(col("doc_id") * 37L, lit(100000L))))
@@ -101,7 +101,7 @@ object ScaleQueries {
     // discipline), so first-arrival differs from min-id.
     "q111_stream_curation" -> ((s, dir) => {
       val base = Pages.withIdPoint(
-        s.read.parquet(s"$dir/documents.parquet").select("doc_id", "text"),
+        Tables.read(s, dir, "documents").select("doc_id", "text"),
         "doc_id")
       val planted = base.unionByName(base.where(col("doc_id") % 10 === 0)
         .withColumn("doc_id", col("doc_id") + 100000L))
@@ -119,7 +119,7 @@ object ScaleQueries {
     "q61_stream_extract" -> ((s, dir) => {
       val st = graft.queries.StackQueries.stack(s).select(Seq("b1", "b4"))
       graft.streaming.StreamTiles.extractStream(
-          s.read.parquet(s"$dir/events.parquet"), "event_id", G, st)
+          Tables.read(s, dir, "events"), "event_id", G, st)
         .select("event_id", "row", "col", "b1", "b4")
     }),
 
@@ -134,7 +134,7 @@ object ScaleQueries {
     // and pins the exact-boundary semantics.
     "q86_sessions_per_tile" -> ((s, dir) => {
       graft.streaming.StreamTiles.sessionsPerTile(
-        s.read.parquet(s"$dir/events.parquet"), "ts", "event_id", G, res = 8)
+        Tables.read(s, dir, "events"), "ts", "event_id", G, res = 8)
     }),
 
     // Stream-stream interval self-join, batch twin: same-cell event
@@ -144,13 +144,13 @@ object ScaleQueries {
     // (and, in streaming, the state-eviction horizon).
     "q89_correlated_pairs" -> ((s, dir) => {
       graft.streaming.StreamTiles.correlatedPairsStream(
-        s.read.parquet(s"$dir/events.parquet"), "ts", "event_id", res = 3)
+        Tables.read(s, dir, "events"), "ts", "event_id", res = 3)
     }),
 
     // extract_xy at table scale: 600k probes left-join the 216k-pixel stack.
     "q27_lineitem_extract" -> ((s, dir) => {
       val probes = Pages.withGrid(
-        s.read.parquet(s"$dir/lineitem.parquet").select(key.as("k")), "k", G)
+        Tables.read(s, dir, "lineitem").select(key.as("k")), "k", G)
       val stack = graft.sources.RasterStack.stack(s, G)
         .withColumnRenamed("row", "grow").withColumnRenamed("col", "gcol")
         .select("grow", "gcol", "b1", "b4")

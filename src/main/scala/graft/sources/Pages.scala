@@ -46,17 +46,17 @@ object Pages {
   }
 
   /**
-   * Pages derived from the driver's `documents.parquet`. The url is a
-   * deterministic function of doc_id; text/lang are carried through
-   * UNCHANGED (byte-identity invariant).
+   * Pages derived from the `documents` fixture table, read with its
+   * declared schema ([[Tables]]), so building the frame starts no Spark
+   * job and plans nothing. The url is a deterministic function of
+   * doc_id; text/lang are carried through UNCHANGED (byte-identity
+   * invariant). No parallelism floor is applied here: the fixture file
+   * scans as one split, and the operators whose per-row work is heavy
+   * enough to pay for an exchange (the text ops, the kNN probes) apply
+   * their own floor (see [[graft.plans.Parallelism]]).
    */
   def fromDocuments(spark: SparkSession, sfDir: String): DataFrame =
-    // scan-parallelism floor: the fixture corpus is one small parquet
-    // file (1 split), which would serialize every narrow chain built on
-    // pages — md5 invariants, PIP assigns, haversine — into one task;
-    // wider sources pass through untouched (plans.Parallelism)
-    graft.plans.Parallelism.floor(
-      spark.read.parquet(s"$sfDir/documents.parquet"), col("doc_id"))
+    Tables.read(spark, sfDir, "documents")
       .withColumn("url", concat(lit("https://host-"), col("doc_id") % 97, lit(".example/d/"), col("doc_id")))
       .withColumn("warc_ts", timestamp_seconds(lit(1577836800L) + col("doc_id")))
       .withColumn("html", encode(concat(lit("<html><body>"), col("text"), lit("</body></html>")), "UTF-8"))

@@ -3,6 +3,7 @@ package graft.tools
 import org.apache.spark.sql.SparkSession
 
 import graft.operators.Similarity
+import graft.sources.Tables
 
 /**
  * One-shot generator for [[graft.queries.TrainedIvf]]: runs the Lloyd
@@ -24,7 +25,7 @@ object FreezeCentroids {
       .config("spark.sql.shuffle.partitions", "16")
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    val vecs = spark.read.parquet(s"$dir/embeddings.parquet")
+    val vecs = Tables.read(spark, dir, "embeddings")
     val cents = Similarity.trainCentroids(vecs, "embedding", k = 16, dim = 64, iters = 3)
     val rows = cents.map(_.map(v => s"$v").mkString("    Array(", ", ", ")"))
       .mkString(",\n")

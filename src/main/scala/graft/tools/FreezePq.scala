@@ -3,6 +3,7 @@ package graft.tools
 import org.apache.spark.sql.SparkSession
 
 import graft.operators.Similarity
+import graft.sources.Tables
 
 /**
  * One-shot generator for [[graft.queries.TrainedPq]]: Lloyd-trains the
@@ -23,7 +24,7 @@ object FreezePq {
       .config("spark.sql.shuffle.partitions", "16")
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    val vecs = spark.read.parquet(s"$dir/embeddings.parquet")
+    val vecs = Tables.read(spark, dir, "embeddings")
     val books = Similarity.trainPqCodebooks(vecs, "embedding",
       mSub = 8, ks = 16, dim = 64, iters = 3)
     val body = books.map { cb =>

@@ -130,11 +130,10 @@ class ExtensionsSpec extends AnyFunSuite {
       .select("doc_id", "lon", "lat")
     val viaPlan = SpatialJoin.assignPlan(pages, "lon", "lat", Fixtures.Polys)
     // physical nodeName strips the Exec suffix: the custom node prints as
-    // "PipAssign". String-match the plan tree rather than exists(): the
-    // pages source now carries a scan-parallelism repartition, whose
-    // Exchange makes AQE wrap the plan in AdaptiveSparkPlanExec — the
-    // custom exec sits inside the adaptive plan, where a top-level
-    // exists() cannot see it.
+    // "PipAssign". String-match the plan tree rather than exists(): once
+    // the plan holds an Exchange, AQE wraps it in AdaptiveSparkPlanExec
+    // and the custom exec sits inside the adaptive plan, where a
+    // top-level exists() cannot see it.
     val planStr = viaPlan.queryExecution.executedPlan.toString
     assert(planStr.contains("PipAssign"), planStr.take(400))
     val a = viaPlan.select("doc_id", "poly_id").collect()

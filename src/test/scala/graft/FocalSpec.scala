@@ -275,6 +275,13 @@ class FocalSpec extends AnyFunSuite with SparkSpec {
     assert(collect(0L, "wave") === got)
   }
 
+  test("flow accumulation rejects an unknown scheme instead of routing it to wave") {
+    val g = GridMeta.northUp(0.0, 0.0, W.toDouble, H.toDouble, width = W, height = H)
+    val e = intercept[IllegalArgumentException](
+      graft.operators.Flow.accumulation(px, "b1", g, localCells = 0L, scheme = "double"))
+    assert(e.getMessage.contains("double"))
+  }
+
   test("focal plans are separable windows: WindowExec, no join, no cartesian") {
     for (df <- Seq(Focal.stats3x3(px, "b1"),
                    Focal.horn(px, "b1", GridMeta.TestGrid),

@@ -182,6 +182,24 @@ class TextOpsSpec extends AnyFunSuite with SparkSpec {
     }
   }
 
+  test("hostCap folds 64-bit ids into avalanche31's domain: ids >= 2^37 match the scalar rule") {
+    import spark.implicits._
+    // scalar twin of Clump.avalanche31 over the pmod(id, 2^31) fold
+    def round(x: Long): Long = (((x >> 16) ^ x) * 73244475L) % 2147483648L
+    def hash(id: Long): Long = {
+      val x2 = round(round(java.lang.Math.floorMod(id, 2147483648L)))
+      (x2 >> 16) ^ x2
+    }
+    val ids = (0L until 200L).map(i => (1L << 37) + i * 1000003L)
+    val docs = ids.map(i => (i, s"https://host-${i % 7}.example/d/$i")).toDF("doc_id", "url")
+    val got = TextAnalysis.hostCap(docs, "url", "doc_id", k = 3)
+      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
+    val want = ids.groupBy(i => s"host-${i % 7}.example").toSeq.flatMap { case (host, hs) =>
+      hs.sortBy(i => (hash(i), i)).take(3).zipWithIndex.map { case (id, r) => (host, r + 1L, id) }
+    }
+    assert(got.sortBy(x => (x._1, x._2)).toSeq === want.sortBy(x => (x._1, x._2)))
+  }
+
   test("removeBoilerplateLines: repeated line within ONE doc counts that doc once") {
     import spark.implicits._
     // 'x' appears 3 times in doc 0 but only in 2 DISTINCT docs -> kept
