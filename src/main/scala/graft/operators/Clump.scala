@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
 
 import graft.core.GridMeta
+import graft.plans.LoopPolicy
 
 /**
  * Raster clump: label 4-connected (rook) regions of equal categorical
@@ -155,33 +156,30 @@ object Clump {
    * components loop.
    *
    * SMALL-GRAPH FINISH (same two-phase discipline as
-   * [[Dedup.components]]): when the region graph fits one task
-   * (`localRegions` bound on BOTH region and edge counts, default 2M ≈
-   * tens of MB of longs), ALL bounded rounds run in ONE single-task
+   * [[Dedup.components]]): when the region graph fits one task (the
+   * session's [[graft.plans.LoopPolicy]] bound on BOTH region and edge
+   * counts), ALL bounded rounds run in ONE single-task
    * kernel over the packed (regions ∪ edges) relation — the per-round
    * rule is replayed exactly (round-start sizes, largest-valid-target,
    * smallest-id tie, size accumulation, edge contraction), so labels
    * are identical to the distributed loop's (spec-pinned both paths).
    * At 100 TB a continental raster's region graph can exceed the
-   * bound — the distributed loop remains the primary path; pass
-   * `localRegions = 0` to force it.
+   * bound — the distributed loop remains the primary path; a bound of
+   * 0 forces it.
    */
   def sieveFixpoint(labeled0: DataFrame, catCol: String, minPix: Int,
                     rounds: Int = 3,
-                    checkpointDir: Option[String] = None,
-                    localRegions: Long = 2000000L): DataFrame = {
+                    checkpointDir: Option[String] = None): DataFrame = {
     val labeled = graft.plans.Caches.track(labeled0)
     // loop-state lineage MUST truncate per round: each round's plan
     // embeds the previous round's tree several times (pick joins reg
     // twice, the relabel joins again), so on top of the clump DAG the
     // logical plan grows ~5x per round and planning/explain dominates
     // (observed: 3 rounds at 217k px wedged the driver in
-    // explainString). Same checkpoint+resetStats discipline as
+    // explainString). Same LoopPolicy.truncate discipline as
     // Dedup.components.
-    checkpointDir.foreach(labeled.sparkSession.sparkContext.setCheckpointDir)
-    def truncate(df: DataFrame): DataFrame =
-      org.apache.spark.sql.GraftBridge.resetStats(
-        if (checkpointDir.isDefined) df.checkpoint() else df.localCheckpoint())
+    val spark = labeled.sparkSession
+    checkpointDir.foreach(spark.sparkContext.setCheckpointDir)
     def adj(w: WindowSpec, runCoord: String): DataFrame = labeled
       .withColumn("__pc", lag(col("component"), 1).over(w))
       .withColumn("__pcoord", lag(col(runCoord), 1).over(w))
@@ -191,13 +189,6 @@ object Clump {
     val e0 = adj(hOrd, "col").unionByName(adj(vOrd, "row"))
     var r = 0
     var done = false
-    val debug = sys.env.contains("GRAFT_COMP_DEBUG")
-    def step[A](l: String)(f: => A): A = {
-      val t0 = System.nanoTime(); val res = f
-      if (debug)
-        println(f"SIEVE   $l ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      res
-    }
     // region-level state: reg(id, n, cat) + undirected distinct edges.
     // Both are PACKED into one persisted tagged relation and
     // materialized by a SINGLE job (the per-tag count below), which
@@ -214,7 +205,7 @@ object Clump {
     // a max over neighbors (duplicates cannot change it) and the
     // distributed loop re-distincts at every contraction, so the
     // per-boundary-pixel duplicates only make the edge-count bound
-    // conservative (duplicates count toward localRegions) — and the
+    // conservative (duplicates count toward the bound) — and the
     // dedup exchange + two aggregation passes disappear from the
     // pre-loop job.
     val edges0 = e0
@@ -234,14 +225,14 @@ object Clump {
     // graph at all — the kernel's one job then computes region stats +
     // adjacency + all rounds in a single pass (counting the pixels is
     // the labeled cache fill we pay anyway). Only rasters too big for
-    // the 4x margin (or with localRegions tightened) pay the exact
+    // the 4x margin (or with the bound tightened) pay the exact
     // packed count probe before choosing a path.
-    val nPx = step("pixel bound")(labeled.count())
+    val nPx = labeled.count()
     // orig region id -> current label (identity to start)
     var relabel = reg0.select(col("id").as("orig"), col("id").as("lbl"))
     var reg = reg0
     var edges: DataFrame = null
-    var localOk = localRegions > 0 && 4L * nPx <= localRegions
+    var localOk = LoopPolicy.fitsLocal(spark, 4L * nPx)
     if (localOk) {
       // lazy + persisted: the kernel runs once, inside the caller's
       // final relabel join, instead of as its own checkpoint job
@@ -250,13 +241,10 @@ object Clump {
       done = true
     } else {
       val packed = graft.plans.Caches.track(mkPacked)
-      val cnts = step("bound probe")(packed.groupBy(col("tag"))
+      val cnts = packed.groupBy(col("tag"))
         .agg(count(lit(1)).as("n")).collect()
-        .map(r => r.getInt(0) -> r.getLong(1)).toMap)
-      val nReg = cnts.getOrElse(0, 0L)
-      val nEdges = cnts.getOrElse(1, 0L)
-      localOk =
-        localRegions > 0 && nReg <= localRegions && nEdges <= localRegions
+        .map(r => r.getInt(0) -> r.getLong(1)).toMap
+      localOk = LoopPolicy.fitsLocal(spark, cnts.getOrElse(0, 0L), cnts.getOrElse(1, 0L))
       if (localOk) {
         relabel = graft.plans.Caches.track(
           localSieveFixpoint(packed, minPix, rounds))
@@ -264,13 +252,12 @@ object Clump {
       } else {
         // distributed loop: checkpoint the round-0 state for the loop's
         // lineage discipline (same contract as round 6)
-        reg = step("reg0")(truncate(reg0))
-        edges = step("edges0")(truncate(packed.where(col("tag") === 1)
-          .select(col("u").as("s"), col("v").as("t"))))
+        reg = LoopPolicy.truncate(reg0, checkpointDir)
+        edges = LoopPolicy.truncate(packed.where(col("tag") === 1)
+          .select(col("u").as("s"), col("v").as("t")), checkpointDir)
       }
     }
     while (r < rounds && !done) {
-      val tRound = System.nanoTime()
       val valid = reg.where(col("rcat").isNotNull).select("id")
       val pick = edges
         .join(valid.withColumnRenamed("id", "s"), "s")
@@ -283,35 +270,36 @@ object Clump {
         .agg(graft.functions.top_k(
           struct((-col("tn")).as("neg"), col("t")), 1).as("top"))
         .select(col("s").as("id"), col("top").getItem(0).getField("t").as("tgt"))
-      val p = step("pick")(truncate(pick))
-      if (step("isEmpty")(p.isEmpty)) done = true
+      val p = LoopPolicy.truncate(pick, checkpointDir)
+      if (p.isEmpty) done = true
       else {
         val mapStep = reg.select(col("id")).join(p, Seq("id"), "left")
           .select(col("id"), coalesce(col("tgt"), col("id")).as("nid"))
-        relabel = step("relabel")(truncate(relabel
+        relabel = LoopPolicy.truncate(relabel
           .join(mapStep.withColumnRenamed("id", "lbl"), Seq("lbl"))
-          .select(col("orig"), col("nid").as("lbl"))))
-        reg = step("reg")(truncate(reg
+          .select(col("orig"), col("nid").as("lbl")), checkpointDir)
+        reg = LoopPolicy.truncate(reg
           .join(mapStep, Seq("id"))
           .groupBy(col("nid").as("id"))
           .agg(sum(col("n")).as("n"),
             // the surviving id keeps ITS OWN category: merged-away
             // smalls contribute only when id == nid, and a region
             // never receives a different-cat value for its own id
-            max(when(col("id") === col("nid"), col("rcat"))).as("rcat"))))
+            max(when(col("id") === col("nid"), col("rcat"))).as("rcat")),
+          checkpointDir)
         val em = mapStep
         // the last round's contracted edges are never read - skip the
         // most expensive per-round job when the loop is about to exit
-        if (r + 1 < rounds) edges = step("edges")(truncate(edges
+        if (r + 1 < rounds) edges = LoopPolicy.truncate(edges
           .join(em.withColumnRenamed("id", "s"), "s")
           .withColumnRenamed("nid", "ns")
           .join(em.withColumnRenamed("id", "t"), "t")
           .withColumnRenamed("nid", "nt")
           .where(col("ns") =!= col("nt"))
-          .select(col("ns").as("s"), col("nt").as("t")).distinct()))
+          .select(col("ns").as("s"), col("nt").as("t")).distinct(),
+          checkpointDir)
         r += 1
       }
-      if (debug) println(f"SIEVE round=$r done=$done ${(System.nanoTime() - tRound) / 1e9}%.2f s")
     }
     // the round-0 region frame already holds (component, max(cat)) and
     // is checkpointed — re-aggregating the full pixel relation here
@@ -402,8 +390,7 @@ object Clump {
   }
 
   def clump(px: DataFrame, catCol: String, g: GridMeta,
-            checkpointDir: Option[String] = None,
-            localFinishEdges: Long = 2000000L): DataFrame = {
+            checkpointDir: Option[String] = None): DataFrame = {
     // RUN-LENGTH PRE-CONTRACTION (round-6): maximal horizontal
     // same-category runs collapse to their FIRST pixel id in one
     // running-max window pass — the same by-row shuffle the horizontal
@@ -433,7 +420,7 @@ object Clump {
         col("__prun") =!= col("__run"))
       .select(col("__prun").as("id_a"), col("__run").as("id_b"))
     val (comp0, compBounded) =
-      Dedup.componentsInfo(e, "id_a", "id_b", checkpointDir, localFinishEdges)
+      Dedup.componentsInfo(e, "id_a", "id_b", checkpointDir)
     // runs with no inter-run edge keep their own id — which IS the
     // min pixel id of their (purely horizontal) region.
     // When the label relation came out of the bounded local finish,

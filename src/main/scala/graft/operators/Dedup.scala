@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.plans.Caches
+import graft.plans.{Caches, LoopPolicy}
 
 /**
  * Deduplication suite for web-text corpora (training-data pipeline
@@ -266,15 +266,14 @@ object Dedup {
    * materializations — labels and the contracted edges — and the
    * emptiness probe reads the fresh checkpoint).
    *
-   * Lineage truncation: every round materializes through a checkpoint —
-   * pass `checkpointDir` (any Hadoop FS: HDFS / S3A / GCS) on a real
-   * cluster so round snapshots survive executor loss; the default
-   * `localCheckpoint` keeps blocks on executors (fine single-node, lost
-   * with an executor on a cluster).
+   * Lineage truncation: every round materializes through
+   * [[graft.plans.LoopPolicy.truncate]] — pass `checkpointDir` (any
+   * Hadoop FS: HDFS / S3A / GCS) on a real cluster so round snapshots
+   * survive executor loss.
    *
    * SMALL-GRAPH FINISH (the second phase of the two-phase MapReduce-CC
    * design): once the contracted edge set fits one task's memory
-   * budget (`localFinishEdges`, default 2M edges ≈ 32 MB of longs —
+   * budget (the session's [[graft.plans.LoopPolicy]] bound —
    * including round 0, when the INPUT is already small), the remaining
    * O(log d) rounds collapse into ONE single-task union-find job
    * (path-halving find, link-larger-root-under-smaller so the root is
@@ -282,13 +281,12 @@ object Dedup {
    * Contraction shrinks the edge set geometrically, so at 100 TB the
    * distributed rounds run only until the graph crosses the bound and
    * the tail of tiny all-shuffle rounds — which scheduling overhead,
-   * not data, dominates — never runs. Pass `localFinishEdges = 0` to
-   * force the pure distributed loop (specs pin both paths identical).
+   * not data, dominates — never runs. A bound of 0 forces the pure
+   * distributed loop (specs pin both paths identical).
    */
   def components(pairs: DataFrame, aCol: String, bCol: String,
-                 checkpointDir: Option[String] = None,
-                 localFinishEdges: Long = 2000000L): DataFrame =
-    componentsInfo(pairs, aCol, bCol, checkpointDir, localFinishEdges)._1
+                 checkpointDir: Option[String] = None): DataFrame =
+    componentsInfo(pairs, aCol, bCol, checkpointDir)._1
 
   /** [[components]] plus whether the LABEL relation is bounded by the
     * local-finish bound (round-0 fast path): a true flag licenses the
@@ -296,19 +294,11 @@ object Dedup {
     * bound that let one task hold the graph guarantees the broadcast
     * fits. */
   private[graft] def componentsInfo(pairs: DataFrame, aCol: String, bCol: String,
-                 checkpointDir: Option[String] = None,
-                 localFinishEdges: Long = 2000000L): (DataFrame, Boolean) = {
+                 checkpointDir: Option[String] = None): (DataFrame, Boolean) = {
     val spark = pairs.sparkSession
     // reliable-FS mode: RDD checkpoints go through the Hadoop FileSystem
     // resolved from the dir (same contract as plans.Checkpoint markers)
     checkpointDir.foreach(spark.sparkContext.setCheckpointDir)
-    // resetStats: a checkpoint's LogicalRDD CARRIES the pre-checkpoint
-    // plan's size estimate, and this loop's self-joins would square it
-    // every round (digit count doubles -> Catalyst grinds million-digit
-    // BigIntegers in join selection by round ~20; see GraftBridge doc)
-    def truncate(df: DataFrame): DataFrame =
-      org.apache.spark.sql.GraftBridge.resetStats(
-        if (checkpointDir.isDefined) df.checkpoint() else df.localCheckpoint())
     // the pair relation is referenced twice (vertex set + edge set) and
     // is typically an expensive near-dup join — materialize it once.
     // PERSIST, not checkpoint: the count below fills the cache in
@@ -323,7 +313,6 @@ object Dedup {
     val p0 = Caches.track(pairs
       .select(col(aCol).as("__a"), col(bCol).as("__b"))
       .where(col("__a").isNotNull && col("__b").isNotNull))
-    val debug = sys.env.contains("GRAFT_COMP_DEBUG")
     // the local finish needs ids a single task can hold as primitives;
     // every production caller keys on LONG ids (doc ids, run ids) —
     // exotic key types just keep the pure distributed loop
@@ -336,39 +325,36 @@ object Dedup {
     // an empty pair set is a normal outcome for a clean corpus
     if (nPairs == 0)
       return (p0.select(col("__a").as("id"), col("__b").as("component")).limit(0), true)
-    if (longKeys && nPairs <= localFinishEdges) {
+    if (longKeys && LoopPolicy.fitsLocal(spark, nPairs)) {
       // ROUND-0 FAST PATH: the union-find map already covers EVERY id
       // appearing in the pair set (both endpoints are inserted), so the
       // result IS the map — no vertex distinct, no label join, no ce
       // distinct+checkpoint (union-find is idempotent under duplicate
       // edges). One single-task job over the cached pairs.
-      if (debug) println(s"COMP local finish at round=0 pairs=$nPairs")
       return (Caches.track(localComponents(
         p0.select(col("__a").as("ca"), col("__b").as("cb")))
         .select(col("c").as("id"), col("m").as("component"))), true)
     }
     // distributed loop from here: truncate lineage off the cached pairs
-    val p = truncate(p0)
+    val p = LoopPolicy.truncate(p0, checkpointDir)
     var labels =
       p.select(col("__a").as("id")).unionByName(p.select(col("__b").as("id")))
         .distinct().withColumn("component", col("id"))
     // contracted edge set, one undirected copy per edge
-    var ce = truncate(p.select(col("__a").as("ca"), col("__b").as("cb")).distinct())
-    var round = 0
+    var ce = LoopPolicy.truncate(
+      p.select(col("__a").as("ca"), col("__b").as("cb")).distinct(), checkpointDir)
     // the per-round mappings stay PERSISTED until the final label
     // materialization (the lazy label chain references every one)
     val ms = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     var nEdges = ce.count()
     while (nEdges > 0) {
-      if (longKeys && nEdges <= localFinishEdges) {
-        val lm = truncate(localComponents(ce))
+      if (longKeys && LoopPolicy.fitsLocal(spark, nEdges)) {
+        val lm = LoopPolicy.truncate(localComponents(ce), checkpointDir)
         labels = labels
           .join(lm.select(col("c").as("component"), col("m")), Seq("component"), "left_outer")
           .select(col("id"), coalesce(col("m"), col("component")).as("component"))
-        if (debug) println(s"COMP local finish at round=$round edges=$nEdges")
         nEdges = 0
       } else {
-      val tRound = System.nanoTime()
       // m0(c) = min(c, smallest neighbor) over the contracted graph
       val m0 = ce.select(col("ca").as("c"), col("cb").as("n"))
         .unionByName(ce.select(col("cb").as("c"), col("ca").as("n")))
@@ -390,7 +376,7 @@ object Dedup {
       // normalize orientation, dedupe — the edge set shrinks every
       // round (this is the round's ONE eager materialization, and it
       // also computes the m caches the lazy label chain will read)
-      ce = truncate(ce
+      ce = LoopPolicy.truncate(ce
         .join(m.select(col("c").as("ca"), col("m").as("__ma")), Seq("ca"), "left_outer")
         .join(m.select(col("c").as("cb"), col("m").as("__mb")), Seq("cb"), "left_outer")
         .select(coalesce(col("__ma"), col("ca")).as("ca"),
@@ -398,13 +384,11 @@ object Dedup {
         .where(col("ca") =!= col("cb"))
         .select(least(col("ca"), col("cb")).as("ca"),
           greatest(col("ca"), col("cb")).as("cb"))
-        .distinct())
-      round += 1
+        .distinct(), checkpointDir)
       nEdges = ce.count()
-      if (debug) println(f"COMP round=$round ${(System.nanoTime() - tRound) / 1e9}%.2f s")
       }
     }
-    val out = truncate(labels)
+    val out = LoopPolicy.truncate(labels, checkpointDir)
     ms.foreach(_.unpersist(false))
     // the loop-exit label relation covers every vertex — unbounded
     (out, false)
@@ -416,7 +400,7 @@ object Dedup {
    * the LARGER root under the SMALLER, so every root is its component's
    * minimum id (the same label the distributed hash-min converges to).
    * Runs as one `mapPartitions` task over `coalesce(1)` — bounded by
-   * the caller's `localFinishEdges`, never the input size.
+   * the session's [[graft.plans.LoopPolicy]] bound, never the input size.
    */
   private def localComponents(edges: DataFrame): DataFrame = {
     val spark = edges.sparkSession

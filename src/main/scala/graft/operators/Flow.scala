@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.core.GridMeta
+import graft.plans.LoopPolicy
 
 /**
  * D8 flow routing over the [[Focal.d8]] pointer forest: watershed
@@ -58,15 +59,32 @@ object Flow {
       s"(CASE WHEN $dir = $code THEN CAST(${dr * w + dc} AS BIGINT) ELSE $acc END)"
     }
 
+  /** Round k of a doubling loop spans 2^k hops, so 63 rounds resolve
+    * any forest up to 2^62 hops deep — far beyond any raster. Reaching
+    * round 64 means the pointers cycle (the D8 forest is acyclic by
+    * construction): an error, never an endless loop or a silent cap. */
+  private val MaxRounds = 63
+
+  private def noConvergence(op: String, pending: Long): Nothing =
+    throw new IllegalStateException(s"Flow.$op: $pending rows still " +
+      s"pending after $MaxRounds doubling rounds; the pointer forest has a cycle")
+
+  /** One ladder step p ← p∘p, len ← len(x→p) + len(p→p∘p): the build
+    * side is keyed by id (unique), the probe side by the current
+    * pointer. `_moved` marks rows whose target was NOT yet a root — zero
+    * such rows = converged. */
+  private def compose(pt: DataFrame): DataFrame =
+    pt.as("a").join(
+        pt.select(col("id").as("pid"), col("p").as("pp"), col("len").as("plen")),
+        col("p") === col("pid"))
+      .select(col("a.id").as("id"), col("pp").as("p"),
+        (col("a.len") + col("plen")).as("len"),
+        (col("pp") =!= col("pid")).as("_moved"))
+
   def routing(px: DataFrame, b: String, g: GridMeta,
-              checkpointDir: Option[String] = None,
-              maxRounds: Int = 40,
-              localCells: Long = 2000000L): DataFrame = {
+              checkpointDir: Option[String] = None): DataFrame = {
     val spark = px.sparkSession
     checkpointDir.foreach(spark.sparkContext.setCheckpointDir)
-    def truncate(df: DataFrame): DataFrame =
-      org.apache.spark.sql.GraftBridge.resetStats(
-        if (checkpointDir.isDefined) df.checkpoint() else df.localCheckpoint())
     val w = g.width.toLong
     // persisted: the D8 relation (two window shuffles + the argmax
     // chain) feeds BOTH the pointer extraction below and the final
@@ -76,9 +94,6 @@ object Flow {
     val dl = delta(col("d8_dir"), w)
     val pt0 = d8.select(id.as("id"), (id + dl).as("p"),
       when(dl === 0L, 0L).otherwise(1L).as("len"))
-    val debug = sys.env.contains("GRAFT_COMP_DEBUG")
-    var moved = 1L
-    var round = 0
     // bound probe = one count over the persisted D8 relation (pt rows
     // == d8 rows), which fills the cache IN PARALLEL before the
     // single-task kernel pulls from it — the round-6 shape additionally
@@ -90,39 +105,25 @@ object Flow {
     // root + hop count in ONE memoized chase instead of ~log(depth)
     // join+checkpoint rounds — q121's fixture ran 6 rounds at ~1.5 s
     // each for a 217k-cell forest a single task walks in milliseconds.
-    // At continental scale the doubling loop remains the path; pass
-    // `localCells = 0` to force it (specs pin both paths identical).
-    var localFinish = false
-    var pt: DataFrame = null
-    if (localCells > 0 && nCells <= localCells) {
-      if (debug) println("FLOW local finish")
-      pt = graft.plans.Caches.track(localRouting(pt0))
-      moved = 0
-      localFinish = true
-    } else {
-      pt = truncate(pt0)
-    }
-    while (moved > 0 && round < maxRounds) {
-      val tRound = System.nanoTime()
-      // compose p <- p(p): the build side is keyed by id (unique), the
-      // probe side by the current pointer; `_moved` marks rows whose
-      // target was NOT yet a root — zero such rows = converged
-      val j = pt.as("a").join(
-          pt.select(col("id").as("pid"), col("p").as("pp"), col("len").as("plen")),
-          col("p") === col("pid"))
-        .select(col("a.id").as("id"), col("pp").as("p"),
-          (col("a.len") + col("plen")).as("len"),
-          (col("pp") =!= col("pid")).as("_moved"))
-      val nt = truncate(j)
-      moved = nt.where(col("_moved")).count()
-      pt = nt.drop("_moved")
-      round += 1
-      if (debug) println(f"FLOW round=$round moved=$moved " +
-        f"${(System.nanoTime() - tRound) / 1e9}%.2f s")
-    }
-    // bounded local-kernel output (<= localCells rows) broadcasts so
-    // the D8 relation never shuffles for the output join; the converged
-    // doubling state (unbounded) keeps the planner's join
+    val localFinish = LoopPolicy.fitsLocal(spark, nCells)
+    val pt =
+      if (localFinish) graft.plans.Caches.track(localRouting(pt0))
+      else {
+        var cur = LoopPolicy.truncate(pt0, checkpointDir)
+        var moved = 1L
+        var round = 0
+        while (moved > 0) {
+          round += 1
+          if (round > MaxRounds) noConvergence("routing", moved)
+          val nt = LoopPolicy.truncate(compose(cur), checkpointDir)
+          moved = nt.where(col("_moved")).count()
+          cur = nt.drop("_moved")
+        }
+        cur
+      }
+    // bounded local-kernel output (within the local-finish bound)
+    // broadcasts so the D8 relation never shuffles for the output join;
+    // the converged doubling state (unbounded) keeps the planner's join
     val ptOut = pt.select(col("id").as("__id"), col("p").as("outlet"),
       col("len").as("flow_len"))
     graft.plans.Caches.track(
@@ -155,122 +156,57 @@ object Flow {
    * Each round: one frontier-filtered join + hash-agg (the
    * contribution), one merge agg, one ladder self-join — all
    * checkpoint-truncated (the [[Dedup.components]] lineage
-   * discipline).
-   *
-   * `scheme = "wave"` keeps the per-hop WAVE propagation (round k
-   * pushes counts of cells exactly k deep; the wave SHRINKS as
-   * branches exhaust, so on shallow terrain its depth × shrinking
-   * total can undercut doubling's log × full-size — the documented
-   * trade): a spec pins doubling ≡ wave ≡ the local chase. The
-   * small-forest finish (same bound discipline as [[routing]])
+   * discipline). The small-forest finish (same bound as [[routing]])
    * resolves bounded forests in ONE O(cells) single-task Kahn sweep.
    *
    * Output: the [[Focal.d8]] columns plus `flow_acc` (exact LONG, 0
    * for ridge cells and nodata).
    */
   def accumulation(px: DataFrame, b: String, g: GridMeta,
-                   checkpointDir: Option[String] = None,
-                   maxRounds: Int = 10000,
-                   localCells: Long = 2000000L,
-                   scheme: String = "doubling"): DataFrame = {
-    require(scheme == "doubling" || scheme == "wave",
-      s"scheme must be \"doubling\" or \"wave\": $scheme")
+                   checkpointDir: Option[String] = None): DataFrame = {
     val spark = px.sparkSession
     checkpointDir.foreach(spark.sparkContext.setCheckpointDir)
-    def truncate(df: DataFrame): DataFrame =
-      org.apache.spark.sql.GraftBridge.resetStats(
-        if (checkpointDir.isDefined) df.checkpoint() else df.localCheckpoint())
     val w = g.width.toLong
     // persisted for the same two-consumer reason as in [[routing]]
     val d8 = graft.plans.Caches.track(Focal.d8(px, b))
     val id = col("row") * w + col("col")
     val dl = delta(col("d8_dir"), w)
     val pt0 = d8.select(id.as("id"), (id + dl).as("p"))
-    val debug = sys.env.contains("GRAFT_COMP_DEBUG")
-    var acc: DataFrame = null
-    var localFinish = false
     // same persist-and-count bound discipline as [[routing]]
     val nCells = d8.count()
-    if (localCells > 0 && nCells <= localCells) {
-      if (debug) println("FLOWACC local finish")
-      acc = graft.plans.Caches.track(localAccumulation(pt0))
-      localFinish = true
-    } else if (scheme == "doubling") {
-      // ladder state: (id, p = 2^k-hop target, len = real hops
-      // traversed, saturating at roots) — identical composition rule
-      // to [[routing]]'s loop
-      var pt = truncate(pt0.withColumn("len",
-        when(col("p") === col("id"), 0L).otherwise(1L)))
-      // S_0: every non-root child deposits 1 on its parent (in-degree
-      // — the same first aggregate the wave's round 0 runs)
-      acc = truncate(pt.where(col("p") =!= col("id"))
-        .groupBy(col("p").as("id")).agg(count(lit(1)).as("w")))
-      var jump = 1L
-      var frontier = pt.where(col("len") === jump)
-      var frontierRows = frontier.count()
-      var round = 0
-      while (frontierRows > 0 && round < maxRounds) {
-        val tRound = System.nanoTime()
-        // y exactly `jump` below x (= p_k(y)) is the unique depth-2^k
-        // waypoint of every descendant of x that is jump..2*jump deep:
-        // add S_k(y) to x. Absent acc rows are S_k = 0 — inner join.
-        val contrib = frontier.select(col("id"), col("p"))
-          .join(acc.select(col("id"), col("w").as("cw")), Seq("id"))
-          .groupBy(col("p").as("id")).agg(sum(col("cw")).as("w"))
-        acc = truncate(acc.unionByName(contrib)
-          .groupBy(col("id")).agg(sum(col("w")).as("w")))
-        // p <- p∘p, len <- len + len(p) (saturates at roots)
-        pt = truncate(pt.as("a").join(
-            pt.select(col("id").as("pid"), col("p").as("pp"),
-              col("len").as("plen")),
-            col("p") === col("pid"))
-          .select(col("a.id").as("id"), col("pp").as("p"),
-            (col("a.len") + col("plen")).as("len")))
-        jump *= 2L
-        frontier = pt.where(col("len") === jump)
-        frontierRows = frontier.count()
-        round += 1
-        if (debug) println(f"FLOWACC doubling round=$round jump=$jump " +
-          f"frontier=$frontierRows ${(System.nanoTime() - tRound) / 1e9}%.2f s")
+    val localFinish = LoopPolicy.fitsLocal(spark, nCells)
+    val acc =
+      if (localFinish) graft.plans.Caches.track(localAccumulation(pt0))
+      else {
+        // ladder state: (id, p = 2^k-hop target, len = real hops
+        // traversed, saturating at roots)
+        var pt = LoopPolicy.truncate(pt0.withColumn("len",
+          when(col("p") === col("id"), 0L).otherwise(1L)), checkpointDir)
+        // S_0: every non-root child deposits 1 on its parent (in-degree)
+        var sk = LoopPolicy.truncate(pt.where(col("p") =!= col("id"))
+          .groupBy(col("p").as("id")).agg(count(lit(1)).as("w")), checkpointDir)
+        var jump = 1L
+        var frontier = pt.where(col("len") === jump)
+        var frontierRows = frontier.count()
+        var round = 0
+        while (frontierRows > 0) {
+          round += 1
+          if (round > MaxRounds) noConvergence("accumulation", frontierRows)
+          // y exactly `jump` below x (= p_k(y)) is the unique depth-2^k
+          // waypoint of every descendant of x that is jump..2*jump deep:
+          // add S_k(y) to x. Absent rows are S_k = 0 — inner join.
+          val contrib = frontier.select(col("id"), col("p"))
+            .join(sk.select(col("id"), col("w").as("cw")), Seq("id"))
+            .groupBy(col("p").as("id")).agg(sum(col("cw")).as("w"))
+          sk = LoopPolicy.truncate(sk.unionByName(contrib)
+            .groupBy(col("id")).agg(sum(col("w")).as("w")), checkpointDir)
+          pt = LoopPolicy.truncate(compose(pt).drop("_moved"), checkpointDir)
+          jump *= 2L
+          frontier = pt.where(col("len") === jump)
+          frontierRows = frontier.count()
+        }
+        sk
       }
-      // unreachable below depth 2^maxRounds, kept for the no-silent-cap
-      // discipline (the q117 hot-bands rule)
-      if (frontierRows > 0)
-        System.err.println(s"WARN Flow.accumulation: doubling loop " +
-          s"exhausted maxRounds=$maxRounds with $frontierRows frontier " +
-          s"rows - flow_acc is UNDERCOUNTED; raise maxRounds")
-    } else {
-      val pt = truncate(pt0)
-      // wave_0: every non-root child deposits 1 on its parent
-      var wave = truncate(pt.where(col("p") =!= col("id"))
-        .groupBy(col("p").as("id")).agg(count(lit(1)).as("w")))
-      acc = wave
-      var round = 0
-      var waveRows = wave.count()
-      while (waveRows > 0 && round < maxRounds) {
-        val tRound = System.nanoTime()
-        // arrivals at x forward to x's parent (roots absorb: p == id
-        // rows are dropped, their counts already accumulated)
-        wave = truncate(wave
-          .join(pt, Seq("id"))
-          .where(col("p") =!= col("id"))
-          .groupBy(col("p").as("id")).agg(sum(col("w")).as("w")))
-        waveRows = wave.count()
-        if (waveRows > 0)
-          acc = truncate(acc.unionByName(wave)
-            .groupBy(col("id")).agg(sum(col("w")).as("w")))
-        round += 1
-        if (debug) println(f"FLOWACC round=$round wave=$waveRows " +
-          f"${(System.nanoTime() - tRound) / 1e9}%.2f s")
-      }
-      // a biting cap must never be silent (the q117 hot-bands
-      // discipline): undercounted flow_acc without a signal would be a
-      // correctness trap on forests deeper than maxRounds
-      if (waveRows > 0)
-        System.err.println(s"WARN Flow.accumulation: wave loop exhausted " +
-          s"maxRounds=$maxRounds with $waveRows wave rows still in flight " +
-          s"- flow_acc is UNDERCOUNTED; raise maxRounds for this forest")
-    }
     // same bounded-broadcast rule as [[routing]]'s output join
     val accOut = acc.select(col("id").as("__id"), col("w").as("flow_acc"))
     graft.plans.Caches.track(

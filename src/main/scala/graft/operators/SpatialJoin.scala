@@ -58,14 +58,20 @@ case class PipContains(first: Expression, second: Expression, third: Expression,
 /**
  * Point-in-polygon joins — the heart of the graft (SURVEY.md §2.3).
  *
- * Two physical shapes, chosen by layer size:
- *  - [[assign]]: zero-shuffle scalar assignment through the broadcast
- *    R-tree expression (small layers; the `mask`/tile-assignment path);
+ * Four physical paths, chosen by the caller from the layer's size:
+ *  - [[assign]] (and its boolean form [[containsAny]]): zero-shuffle
+ *    scalar assignment through the broadcast R-tree expression (small
+ *    layers; the `mask`/tile-assignment path);
+ *  - [[assignPlan]]: the same semantics as a custom logical plan +
+ *    strategy + physical exec, the template for operators that do not
+ *    decompose into expressions;
  *  - [[pipJoin]]: cover-cells equi-join + exact refine — polygon bboxes
- *    explode to covering cells at `res`, probes join on their cell id,
- *    then exact PIP refines. Shuffle-free on the probe side when the
- *    cover table is broadcast; scales to big layers by letting Spark
- *    shuffle on cell_id (AQE handles hot-cell skew).
+ *    explode to covering cells at `res` on the driver, probes join the
+ *    broadcast cover table on their cell id, then exact PIP refines;
+ *  - [[pipJoinTable]] / [[pipJoinTableRings]]: the layer as DATA — the
+ *    cover explode is Column arithmetic, both sides shuffle on cell_id
+ *    (AQE handles hot-cell skew), so no PolygonSet is ever built on the
+ *    driver.
  */
 object SpatialJoin {
 
@@ -198,25 +204,6 @@ object SpatialJoin {
     * ops in identical order. */
   def ringsContainCol(px: Column, py: Column, xss: Column, yss: Column): Column =
     c(graft.functions.RingsContain(e(px), e(py), e(xss), e(yss)))
-
-  /**
-   * Even-odd ray cast over parallel vertex arrays — the Column twin of
-   * `core.Polygon.ringContains` (identical crossing formula, so the
-   * broadcast and table paths agree bit-for-bit). Boolean fold via
-   * `aggregate`; the division is guarded by the crossing test (CaseWhen
-   * evaluates lazily) and is IEEE-total for doubles regardless.
-   */
-  def ringContainsCol(px: Column, py: Column, xs: Column, ys: Column): Column = {
-    val nv = size(xs)
-    org.apache.spark.sql.functions.aggregate(sequence(lit(1), nv), lit(false), (acc, i) => {
-      val j = when(i === 1, nv).otherwise(i - 1)
-      val xi = element_at(xs, i); val yi = element_at(ys, i)
-      val xj = element_at(xs, j); val yj = element_at(ys, j)
-      val crosses = ((yi > py) =!= (yj > py)) &&
-        (px < (xj - xi) * (py - yi) / (yj - yi) + xi)
-      when(crosses, !acc).otherwise(acc)
-    })
-  }
 
   /**
    * Last-wins variant of the cover-cells join (max containing poly_id per

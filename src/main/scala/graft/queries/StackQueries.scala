@@ -469,9 +469,10 @@ object StackQueries {
       graft.operators.Contour.segments(
         stack(s).df.select("row", "col", "b1"), "b1", level = 127.5)),
 
-    // Flow accumulation (upstream contributing-cell count): wave
-    // propagation over the D8 forest / single-task chase under the
-    // bound; the oracle counts recursive-walk visits per node.
+    // Flow accumulation (upstream contributing-cell count): a
+    // single-task Kahn sweep under the local-finish bound, else the
+    // subtree-count doubling ladder over the D8 forest; the oracle
+    // counts recursive-walk visits per node.
     "q128_flow_accum" -> ((s, _) =>
       graft.operators.Flow.accumulation(
         stack(s).df.select("row", "col", "b1"), "b1", G)

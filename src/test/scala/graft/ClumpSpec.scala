@@ -67,9 +67,9 @@ class ClumpSpec extends AnyFunSuite with SparkSpec {
     val cells = for { r <- 0 until H; c <- 0 until W } yield (r, c)
     val px = cells.map { case (r, c) => (r.toLong, c.toLong, catAt(r, c)) }
       .toDF("row", "col", "cat")
-    val dist = Clump.clump(px, "cat", g, localFinishEdges = 0L)
+    val dist = withLocalFinishRows(0L)(Clump.clump(px, "cat", g)
       .select("row", "col", "component")
-      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
+      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap)
     val loc = Clump.clump(px, "cat", g)
       .select("row", "col", "component")
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
@@ -137,21 +137,20 @@ class ClumpSpec extends AnyFunSuite with SparkSpec {
       (0L, c.toLong, Some(if (c < 2) 10L else if (c < 7) 20L else 30L))
     }.toDF("row", "col", "cat")
     val labeled = Clump.clump(px, "cat", strip)
-    def run(localRegions: Long, rounds: Int): Map[Long, (Option[Long], Long)] =
-      Clump.sieveFixpoint(labeled, "cat", minPix = 6, rounds = rounds,
-          localRegions = localRegions)
+    def run(rounds: Int): Map[Long, (Option[Long], Long)] =
+      Clump.sieveFixpoint(labeled, "cat", minPix = 6, rounds = rounds)
         .select("col", "cat_out", "component_out").collect()
         .map(r => r.getLong(0) ->
           ((if (r.isNullAt(1)) None else Some(r.getLong(1))), r.getLong(2))).toMap
-    val local = run(2000000L, rounds = 3)
+    val local = run(rounds = 3)
     // everything lands in Z (component id 7 = Z's first pixel), cat 30
     assert(local.values.toSet === Set((Some(30L), 7L)))
     // the distributed loop computes the identical relabel
-    assert(run(0L, rounds = 3) === local)
+    assert(withLocalFinishRows(0L)(run(rounds = 3)) === local)
     // rounds=1 bounds the fixpoint: X stays unmerged (component 0)
-    val one = run(2000000L, rounds = 1)
+    val one = run(rounds = 1)
     assert(one(0L) === ((Some(10L), 0L)) && one(7L) === ((Some(30L), 7L)))
-    assert(run(0L, rounds = 1) === one)
+    assert(withLocalFinishRows(0L)(run(rounds = 1)) === one)
   }
 
   test("edge construction is window lags, not a self-join") {

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -192,94 +193,105 @@ class FocalSpec extends AnyFunSuite with SparkSpec {
     assert(dirs.exists(d => Set(2L, 8L, 32L, 128L).contains(d)))
   }
 
+  /** Scalar D8 successor over an h×w grid of `value` (the cell itself at
+    * pits, flats and nodata): the argmax and smallest-code tie-break of
+    * [[Focal.d8]], over the shared-Ar drop. */
+  private def d8Next(h: Int, w: Int, value: (Int, Int) => Option[Long])
+                    (r: Int, c: Int): (Int, Int) = {
+    import graft.operators.Utm.DblAr
+    value(r, c).map { z =>
+      var bd = 0.0; var best = (r, c)
+      Focal.D8Codes.foreach { case (_, dr, dc, dist) =>
+        val rr = r + dr; val cc = c + dc
+        if (rr >= 0 && rr < h && cc >= 0 && cc < w)
+          value(rr, cc).foreach { zn =>
+            val d = Focal.d8Drop[Double](z.toDouble, zn.toDouble, dist)(DblAr)
+            if (d > bd) { bd = d; best = (rr, cc) }
+          }
+      }
+      best
+    }.getOrElse((r, c))
+  }
+
+  /** The scalar per-hop walk from every cell to its root: the expected
+    * routing row (outlet id, outlet row, outlet col, hops) per cell, and
+    * the expected flow_acc (how many walks pass through the cell). */
+  private def scalarWalk(h: Int, w: Int, value: (Int, Int) => Option[Long])
+      : (Map[(Int, Int), (Long, Long, Long, Long)], Map[(Int, Int), Long]) = {
+    val next = d8Next(h, w, value) _
+    val acc = scala.collection.mutable.Map.empty[(Int, Int), Long].withDefaultValue(0L)
+    val route = (for (r0 <- 0 until h; c0 <- 0 until w) yield {
+      var cur = (r0, c0); var len = 0L; var nx = next(r0, c0)
+      while (nx != cur) { acc(nx) += 1; cur = nx; len += 1; nx = next(cur._1, cur._2) }
+      (r0, c0) -> ((cur._1.toLong * w + cur._2, cur._1.toLong, cur._2.toLong, len))
+    }).toMap
+    (route, route.keys.map(rc => rc -> acc(rc)).toMap)
+  }
+
+  private def routingOf(dem: DataFrame, g: GridMeta): Map[(Int, Int), (Long, Long, Long, Long)] =
+    graft.operators.Flow.routing(dem, "b1", g)
+      .select("row", "col", "outlet", "outlet_row", "outlet_col", "flow_len")
+      .collect().map(r => (r.getLong(0).toInt, r.getLong(1).toInt) ->
+        ((r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5)))).toMap
+
+  private def accumulationOf(dem: DataFrame, g: GridMeta): Map[(Int, Int), Long] =
+    graft.operators.Flow.accumulation(dem, "b1", g)
+      .select("row", "col", "flow_acc")
+      .collect().map(r => (r.getLong(0).toInt, r.getLong(1).toInt) -> r.getLong(2)).toMap
+
   test("flow routing equals the scalar per-hop walk (outlet + hop count)") {
     val g = GridMeta.northUp(0.0, 0.0, W.toDouble, H.toDouble, width = W, height = H)
-    val got = graft.operators.Flow.routing(px, "b1", g)
-      .select("row", "col", "outlet", "outlet_row", "outlet_col", "flow_len")
-      .collect().map(r => (r.getLong(0).toInt, r.getLong(1).toInt) ->
-        ((r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5)))).toMap
+    val got = routingOf(px, g)
     assert(got.size === H * W)
-    // scalar twin: D8 argmax per cell, then follow pointers to the root
-    import graft.operators.Utm.DblAr
-    def step(r: Int, c: Int): (Int, Int) =
-      valueAt(r, c).map { z =>
-        var bd = 0.0; var best = (r, c)
-        Focal.D8Codes.foreach { case (_, dr, dc, dist) =>
-          val rr = r + dr; val cc = c + dc
-          if (rr >= 0 && rr < H && cc >= 0 && cc < W)
-            valueAt(rr, cc).foreach { zn =>
-              val d = Focal.d8Drop[Double](z.toDouble, zn.toDouble, dist)(DblAr)
-              if (d > bd) { bd = d; best = (rr, cc) }
-            }
-        }
-        best
-      }.getOrElse((r, c))
-    var sawMultiHop = false
-    for (r0 <- 0 until H; c0 <- 0 until W) {
-      var cur = (r0, c0); var len = 0L
-      var next = step(cur._1, cur._2)
-      while (next != cur) { cur = next; len += 1; next = step(cur._1, cur._2) }
-      if (len >= 2) sawMultiHop = true
-      assert(got((r0, c0)) ===
-        ((cur._1.toLong * W + cur._2, cur._1.toLong, cur._2.toLong, len)),
-        s"cell ($r0,$c0)")
-    }
+    val (want, _) = scalarWalk(H, W, valueAt)
+    for (r0 <- 0 until H; c0 <- 0 until W)
+      assert(got((r0, c0)) === want((r0, c0)), s"cell ($r0,$c0)")
     // the fixture must exercise a real multi-hop path or the doubling
     // loop (vs a single jump) is untested
-    assert(sawMultiHop)
+    assert(want.values.exists(_._4 >= 2))
     // forced distributed doubling loop == the single-task local finish
-    val dist = graft.operators.Flow.routing(px, "b1", g, localCells = 0L)
-      .select("row", "col", "outlet", "outlet_row", "outlet_col", "flow_len")
-      .collect().map(r => (r.getLong(0).toInt, r.getLong(1).toInt) ->
-        ((r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5)))).toMap
+    val dist = withLocalFinishRows(0L)(routingOf(px, g))
     assert(dist === got)
   }
 
   test("flow accumulation equals the scalar path-visit count; both paths equal") {
     val g = GridMeta.northUp(0.0, 0.0, W.toDouble, H.toDouble, width = W, height = H)
-    def collect(localCells: Long, scheme: String = "doubling"): Map[(Int, Int), Long] =
-      graft.operators.Flow.accumulation(px, "b1", g, localCells = localCells,
-          scheme = scheme)
-        .select("row", "col", "flow_acc")
-        .collect().map(r => (r.getLong(0).toInt, r.getLong(1).toInt) ->
-          r.getLong(2)).toMap
-    val got = collect(2000000L)
+    val got = accumulationOf(px, g)
     assert(got.size === H * W)
-    // scalar twin: walk every cell's chain, incrementing the visited
-    import graft.operators.Utm.DblAr
-    def step(r: Int, c: Int): (Int, Int) =
-      valueAt(r, c).map { z =>
-        var bd = 0.0; var best = (r, c)
-        Focal.D8Codes.foreach { case (_, dr, dc, dist) =>
-          val rr = r + dr; val cc = c + dc
-          if (rr >= 0 && rr < H && cc >= 0 && cc < W)
-            valueAt(rr, cc).foreach { zn =>
-              val d = Focal.d8Drop[Double](z.toDouble, zn.toDouble, dist)(DblAr)
-              if (d > bd) { bd = d; best = (rr, cc) }
-            }
-        }
-        best
-      }.getOrElse((r, c))
-    val want = scala.collection.mutable.Map.empty[(Int, Int), Long]
-      .withDefaultValue(0L)
-    for (r0 <- 0 until H; c0 <- 0 until W) {
-      var cur = (r0, c0); var next = step(cur._1, cur._2)
-      while (next != cur) { want(next) += 1; cur = next; next = step(cur._1, cur._2) }
-    }
+    val (_, want) = scalarWalk(H, W, valueAt)
     for (r <- 0 until H; c <- 0 until W)
       assert(got((r, c)) === want((r, c)), s"cell ($r,$c)")
     assert(got.values.max >= 3L, "fixture too flat to exercise accumulation")
-    // forced distributed paths == the single-task Kahn sweep: the
-    // O(log depth) subtree-count doubling ladder AND the per-hop wave
-    assert(collect(0L, "doubling") === got)
-    assert(collect(0L, "wave") === got)
+    // forced distributed subtree-count doubling == the single-task Kahn sweep
+    assert(withLocalFinishRows(0L)(accumulationOf(px, g)) === got)
   }
 
-  test("flow accumulation rejects an unknown scheme instead of routing it to wave") {
-    val g = GridMeta.northUp(0.0, 0.0, W.toDouble, H.toDouble, width = W, height = H)
-    val e = intercept[IllegalArgumentException](
-      graft.operators.Flow.accumulation(px, "b1", g, localCells = 0L, scheme = "double"))
-    assert(e.getMessage.contains("double"))
+  test("flow on a deep chain and a wide fan: both paths equal the scalar walk") {
+    import spark.implicits._
+    // a monotone 1x320 strip: every cell drains west, up to 319 hops,
+    // so the doubling ladder passes the len == 2^k waypoints, k = 0..8
+    val strip: (Int, Int) => Option[Long] = (_, c) => Some(c.toLong)
+    // a 21x21 cone: every cell drains to the centre pit, and each axis
+    // cell gathers a whole diagonal wedge
+    val cone: (Int, Int) => Option[Long] =
+      (r, c) => Some((math.abs(r - 10) + math.abs(c - 10)).toLong)
+    for ((h, w, value) <- Seq((1, 320, strip), (21, 21, cone))) {
+      val g = GridMeta.northUp(0.0, 0.0, w.toDouble, h.toDouble, width = w, height = h)
+      val dem = (for (r <- 0 until h; c <- 0 until w)
+        yield (r.toLong, c.toLong, value(r, c).map(_.toDouble))).toDF("row", "col", "b1")
+      val (route, acc) = scalarWalk(h, w, value)
+      assert(routingOf(dem, g) === route, s"${h}x$w routing, local finish")
+      assert(accumulationOf(dem, g) === acc, s"${h}x$w accumulation, local finish")
+      withLocalFinishRows(0L) {
+        assert(routingOf(dem, g) === route, s"${h}x$w routing, distributed")
+        assert(accumulationOf(dem, g) === acc, s"${h}x$w accumulation, distributed")
+      }
+    }
+    // fixture sanity: the strip reaches every waypoint depth 2^0..2^8,
+    // and the whole cone drains into one pit
+    val (stripRoute, _) = scalarWalk(1, 320, strip)
+    assert((0 to 8).forall(k => stripRoute.values.exists(_._4 == (1L << k))))
+    assert(scalarWalk(21, 21, cone)._2((10, 10)) === 21L * 21 - 1)
   }
 
   test("focal plans are separable windows: WindowExec, no join, no cartesian") {

@@ -513,11 +513,21 @@ class PipelineSpec extends AnyFunSuite with SparkSpec {
     }.toDF("id_a", "id_b")
     val local = Dedup.components(pairs, "id_a", "id_b")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val dist = Dedup.components(pairs, "id_a", "id_b", localFinishEdges = 0L)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val dist = withLocalFinishRows(0L)(Dedup.components(pairs, "id_a", "id_b")
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)
     assert(local === dist)
     // labels are component minima: every label maps to itself
     assert(local.filter { case (id, c) => id == c }.keySet === local.values.toSet)
+  }
+
+  test("q63 through its query definition: forced distributed loop == local finish") {
+    val q63 = SparkEntry.queries("q63_filter_points_dist")
+    def rows(): Seq[(Long, Long)] = q63(spark, sf("")).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toSeq.sorted
+    val local = rows()
+    // a cluster of >= 2 points means the components loop saw edges
+    assert(local.exists(_._2 > 1), "fixture must give the loop an edge")
+    assert(withLocalFinishRows(0L)(rows()) === local)
   }
 
   test("dedup components: empty pair set returns the empty relation (no NPE)") {

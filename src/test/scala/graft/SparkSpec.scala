@@ -7,6 +7,16 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkSpec { self: AnyFunSuite =>
   lazy val spark: SparkSession = SparkSpec.session
   def sf(name: String) = s"/root/testdata/sf0.001"
+
+  /** Runs `body` under the iterative operators' local-finish bound
+    * `rows` (0 forces their distributed loops), then restores the
+    * session's previous setting. */
+  def withLocalFinishRows[A](rows: Long)(body: => A): A = {
+    val key = graft.plans.LoopPolicy.LocalFinishRows
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, rows)
+    try body finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
 }
 
 object SparkSpec {
