@@ -21,6 +21,9 @@ import graft.sources.{Fixtures, Pages}
  */
 object Bench {
 
+  /** The session recipe of every engine main (Bench, BenchExtra,
+    * PlanDump, Verify) and of the specs' `SparkSpec`: `local[cpus]`,
+    * `cpus` shuffle partitions, UTC, UI off, AQE on. */
   def session(cpus: Int): SparkSession = {
     val s = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -52,17 +55,23 @@ object Bench {
       .count()
   }
 
-  /** Deterministic bench input, created once, 64 splits for even task fan-out. */
-  def prepPages(rows: Long): String = {
-    val path = s"/tmp/graft_bench_pages_$rows"
-    if (!new java.io.File(path + "/_SUCCESS").exists()) {
-      val s = session(32)
-      // 128 range slices -> 128 parquet files, no shuffle; even fan-out
-      // at both bench parallelism levels
-      Pages.synthesize(s, rows, parts = 128).write.mode("overwrite").parquet(path)
-      closed(s)
-    }
+  /** Parquet fixture cached under /tmp at
+    * `/tmp/<base>_v<ProtocolVersion>_<param>_...`: `write(path)` runs
+    * only when that path has no `_SUCCESS` marker, so a protocol bump or
+    * a new parameter value never reads a stale cache. */
+  private def cachedFixture(base: String, params: Any*)(write: String => Unit): String = {
+    val path = (s"/tmp/${base}_v$ProtocolVersion" +: params.map(_.toString)).mkString("_")
+    if (!new java.io.File(path + "/_SUCCESS").exists()) write(path)
     path
+  }
+
+  /** Deterministic bench input, created once, 128 splits for even task fan-out. */
+  def prepPages(rows: Long): String = cachedFixture("graft_bench_pages", rows) { path =>
+    val s = session(32)
+    // 128 range slices -> 128 parquet files, no shuffle; even fan-out
+    // at both bench parallelism levels
+    Pages.synthesize(s, rows, parts = 128).write.mode("overwrite").parquet(path)
+    closed(s)
   }
 
   private def time[A](f: => A): Double = {
@@ -476,10 +485,14 @@ object Bench {
       else Map.empty
     val s0 = session(cpus)
     SparkEntry.entry(s0).count() // session warm-up (codegen, parquet reader)
-    def timeQuery(name: String, fn: (SparkSession, String) => DataFrame): Double = {
-      val t = time { try fn(s0, sfDir).count() catch { case _: Throwable => -1L } }
+    // a query that throws is never a timing: it goes on the `failed` list
+    // (and out of the per-query maps), and the run exits 1 after the line
+    val failed = scala.collection.mutable.LinkedHashSet.empty[String]
+    def timeQuery(name: String, fn: (SparkSession, String) => DataFrame): Option[Double] = {
+      var threw = false
+      val t = time { try fn(s0, sfDir).count() catch { case _: Throwable => threw = true } }
       graft.plans.Caches.flush() // release operator persist barriers
-      t
+      if (threw) { failed += name; None } else Some(t)
     }
     // Retime budget is based on the QUERY-LOOP start, not process start:
     // round 3's official run entered the loop with the global budget
@@ -488,8 +501,8 @@ object Bench {
     // shipped 24x-inflated per-query numbers.
     val tLoop = System.nanoTime()
     def loopElapsedS: Double = (System.nanoTime() - tLoop) / 1e9
-    val firstPass = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-      (name, fn, timeQuery(name, fn))
+    val firstPass = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
+      timeQuery(name, fn).map(t => (name, fn, t))
     }
     // second pass at loop END (the episode that inflated a first-pass
     // time has had the whole loop to drain): every query >2.5x its
@@ -504,9 +517,9 @@ object Bench {
       qAnchors.get(name).filter(a => t > 2.5 * a).map(a => (name, t / a))
     }.sortBy(-_._2).foreach { case (name, _) =>
       if (loopElapsedS < 600)
-        results0(name) = math.min(results0(name), timeQuery(name, fns(name)))
+        timeQuery(name, fns(name)).foreach(t => results0(name) = math.min(results0(name), t))
     }
-    val results = results0.toSeq
+    val results = results0.toSeq.filterNot { case (n, _) => failed(n) }
 
     // ---- sf1 section: three signature shapes an ORDER OF MAGNITUDE up
     // (VERDICT r5 item 7) — 10x the sf0.1 inputs, synthesized
@@ -531,13 +544,12 @@ object Bench {
       graft.plans.Caches.flush()
       // jaccard near-dup at 55k docs (10x the q33 corpus): synthetic
       // 54-word texts (the sf0.1 mean), every-10th planted near-dups
-      val docsPath = "/tmp/graft_sf1_docs"
-      if (!new java.io.File(docsPath + "/_SUCCESS").exists()) {
+      val docsPath = cachedFixture("graft_sf1_docs", 50000L) { path =>
         val wordCols = (0 until 54).map(i =>
           concat(lit("w"), pmod(col("id") * 53L + lit(i.toLong * 17L), lit(5000L))))
         s0.range(0, 50000, 1, 32).select(col("id").as("doc_id"),
           concat_ws(" ", wordCols: _*).as("text"))
-          .write.mode("overwrite").parquet(docsPath)
+          .write.mode("overwrite").parquet(path)
       }
       val jaccS = time {
         val d = s0.read.parquet(docsPath)
@@ -550,12 +562,11 @@ object Bench {
       graft.plans.Caches.flush()
       // correlated event pairs: 1M events over 300 days (10x rows AND
       // 10x span — q89's (cell, bucket) state keying holds density flat)
-      val evPath = "/tmp/graft_sf1_events"
-      if (!new java.io.File(evPath + "/_SUCCESS").exists()) {
+      val evPath = cachedFixture("graft_sf1_events", 1000000L) { path =>
         s0.range(0, 1000000, 1, 32).select(col("id").as("event_id"),
           timestamp_seconds(lit(1704067200L) +
             pmod(col("id") * 92173L, lit(25920000L))).as("ts"))
-          .write.mode("overwrite").parquet(evPath)
+          .write.mode("overwrite").parquet(path)
       }
       val corrS = time {
         graft.streaming.StreamTiles.correlatedPairsStream(
@@ -626,9 +637,13 @@ object Bench {
     val sf1Json =
       s""""sf1":{"clump_s":${r3(sf1._1)},"jacc_s":${r3(sf1._2)},""" +
       s""""corr_s":${r3(sf1._3)}}"""
+    // failed queries ship on the line only when there are any (short
+    // keys, never dropped); bench_detail.json always carries full names
+    def names(ns: Iterable[String]): String = ns.map(n => s""""$n"""").mkString("[", ",", "]")
     def line(withQueries: Boolean, withSkew: Boolean,
              withSf1: Boolean = true, bareKeys: Boolean = false): String =
       s"""{"metric":"total","value":${r3(total)},"unit":"sec",""" +
+      (if (failed.nonEmpty) s""""failed":${names(failed.map(shortKey))},""" else "") +
       (if (withQueries) s""""queries":${if (bareKeys) qsBare else qs},"""
        else "") +
       s""""sf":"$sfDir",$pipelineJson""" +
@@ -636,7 +651,7 @@ object Bench {
       (if (withSkew) s",$skewJson" else "") + "}"
     // full-fidelity companion artifact: samples, full query names, skew
     val detail =
-      s"""{"samples":$samplesJson,""" +
+      s"""{"samples":$samplesJson,"failed":${names(failed)},""" +
       s""""queries_full":${results.map { case (k, v) => s""""$k":${r3(v)}""" }.mkString("{", ",", "}")},""" +
       s"""$pipelineJson,""" +
       s""""sf1_detail":{"clump_px":2165946,"clump_s":${r3(sf1._1)},""" +
@@ -660,5 +675,6 @@ object Bench {
     System.err.println(s"bench line length: ${out.length} (budget 1800)")
     println(out)
     System.out.flush()
+    if (failed.nonEmpty) sys.exit(1)
   }
 }

@@ -58,13 +58,10 @@ case class PipContains(first: Expression, second: Expression, third: Expression,
 /**
  * Point-in-polygon joins — the heart of the graft (SURVEY.md §2.3).
  *
- * Four physical paths, chosen by the caller from the layer's size:
+ * Three physical paths, chosen by the caller from the layer's size:
  *  - [[assign]] (and its boolean form [[containsAny]]): zero-shuffle
  *    scalar assignment through the broadcast R-tree expression (small
  *    layers; the `mask`/tile-assignment path);
- *  - [[assignPlan]]: the same semantics as a custom logical plan +
- *    strategy + physical exec, the template for operators that do not
- *    decompose into expressions;
  *  - [[pipJoin]]: cover-cells equi-join + exact refine — polygon bboxes
  *    explode to covering cells at `res` on the driver, probes join the
  *    broadcast cover table on their cell id, then exact PIP refines;
@@ -82,27 +79,6 @@ object SpatialJoin {
   def assign(points: DataFrame, lon: Column, lat: Column, polys: PolygonSet,
              out: String = "poly_id"): DataFrame =
     points.withColumn(out, c(PipWinner(e(lon), e(lat), polys)))
-
-  /**
-   * [[assign]] as a WHOLE-OPERATOR custom plan — same semantics through
-   * the third rung of the extension ladder (LogicalPlan + Strategy +
-   * physical exec, `plans.PipAssignPlan`). Self-registers its strategy
-   * on the session (also injectable via `GraftExtensions`). The
-   * expression path remains the default (it stays inside codegen); this
-   * path is the template for operators that DON'T decompose into
-   * expressions.
-   */
-  def assignPlan(points: DataFrame, lonCol: String, latCol: String, polys: PolygonSet,
-                 out: String = "poly_id"): DataFrame = {
-    val exp = points.sparkSession.experimental
-    if (!exp.extraStrategies.contains(graft.plans.PipAssignStrategy))
-      exp.extraStrategies = exp.extraStrategies :+ graft.plans.PipAssignStrategy
-    val lp = points.queryExecution.analyzed
-    def attr(n: String) = lp.output.find(_.name == n).getOrElse(
-      throw new IllegalArgumentException(s"no column '$n' in ${lp.output.map(_.name)}"))
-    GraftBridge.ofRows(points.sparkSession,
-      graft.plans.PipAssignPlan(lp, attr(lonCol), attr(latCol), polys, out))
-  }
 
   /** Boolean containment column (for mask / semi / anti). */
   def containsAny(lon: Column, lat: Column, polys: PolygonSet): Column =

@@ -736,6 +736,15 @@ object Warp {
  * failed compile and fell back to split-method projection, and every
  * optimizer walk carried the megabyte tree. A 3-node tree keeps
  * WholeStageCodegen fused and makes plan transforms O(1).
+ *
+ * CAVEAT (out-of-domain input): bit-identity holds only while the
+ * series stays off NaN. `Utm.Ar.gt` is Java `>` in DblAr (NaN > x is
+ * false) but Spark `GreaterThan` in the Column tree and `>` in DuckDB
+ * for the SQL twin (NaN > x is true), so a NaN reaching a `gt` can take
+ * a different branch. The composed atan2 of the polar-stereographic
+ * inverse is where that happens: a NaN northing yields a finite
+ * longitude here and NaN in the Column tree and the oracle
+ * (`CrsPropertySpec` pins both).
  */
 case class CrsPoint(left: org.apache.spark.sql.catalyst.expressions.Expression,
                     right: org.apache.spark.sql.catalyst.expressions.Expression,

@@ -86,7 +86,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     reg("utm_northing", args => utm(args, (lo, la, z, nf) => Utm.fwdEN(lo, la, z, nf)(Utm.ExprAr)._2))
 
     e.injectOptimizerRule(_ => CellParentPruning)
-    e.injectPlannerStrategy(_ => PipAssignStrategy)
   }
 }
 

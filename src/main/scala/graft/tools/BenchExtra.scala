@@ -1,20 +1,28 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 
 /**
- * Warm-session per-query timing harness for the optimization loop —
- * replicates the official Bench query-loop methodology (one warm
- * session, `.count()` action, `Caches.flush()` between timings,
- * alphabetical order) over an arbitrary query subset with repeats, so
- * a single invocation answers "what do these queries cost warm" in a
+ * Warm-session per-query timing harness — the one tool that measures
+ * query time. Replicates the official Bench query-loop methodology (one
+ * `Bench.session`, `.count()` action, `Caches.flush()` between timings,
+ * alphabetical order) over an arbitrary query subset with repeats, so a
+ * single invocation answers "what do these queries cost warm" in a
  * minute instead of a ~13-minute full Bench run. Prints per-query
- * samples + min. Does NOT replace Bench: the official artifact is
- * still the frozen `graft.Bench` main.
+ * samples + min, and after each sample the Spark jobs it ran (wall
+ * seconds + description): the per-job split of a query's seconds
+ * (checkpoints, counts, broadcasts, loop rounds). Does NOT replace
+ * Bench: the official artifact is still the frozen `graft.Bench` main.
+ *
+ * A query that throws prints `BENCH_EXTRA <q> FAILED <class: message>`
+ * and stops repeating; it is left out of the summary and the total, the
+ * loop goes on, and the run exits with status 1 at the end.
  *
  * Usage:
  *   sbt "runMain graft.tools.BenchExtra <sfdir> <cpus> <repeats> [q1,q2,...]"
- * (no query list = all queries, one pass)
+ * (no query list = all queries)
  */
 object BenchExtra {
   def main(args: Array[String]): Unit = {
@@ -23,33 +31,21 @@ object BenchExtra {
     val repeats = if (args.length > 2) args(2).toInt else 1
     val filter: Option[Set[String]] =
       if (args.length > 3) Some(args(3).split(",").map(_.trim).toSet) else None
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .appName("graft-bench-extra")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // optional per-job breakdown (GRAFT_JOB_DEBUG=1): job wall seconds +
-    // description, printed after each query — maps query seconds to the
-    // specific actions (checkpoints, counts, broadcasts) inside it
-    val jobLog = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Long, String)]()
-    val jobStart = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()
-    if (sys.env.contains("GRAFT_JOB_DEBUG")) {
-      spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-          val desc = Option(j.properties)
-            .flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse("")
-          jobStart.put(j.jobId, (System.nanoTime(), desc))
+    val spark = graft.Bench.session(cpus)
+    val jobLog = new ConcurrentLinkedQueue[(Int, Long, String)]()
+    val jobStart = new ConcurrentHashMap[Int, (Long, String)]()
+    spark.sparkContext.addSparkListener(new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = {
+        val desc = Option(j.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse("")
+        jobStart.put(j.jobId, (System.nanoTime(), desc))
+      }
+      override def onJobEnd(j: SparkListenerJobEnd): Unit =
+        Option(jobStart.remove(j.jobId)).foreach { case (t0, desc) =>
+          jobLog.add((j.jobId, System.nanoTime() - t0, desc))
         }
-        override def onJobEnd(j: org.apache.spark.scheduler.SparkListenerJobEnd): Unit = {
-          Option(jobStart.remove(j.jobId)).foreach { case (t0, desc) =>
-            jobLog.add((j.jobId, System.nanoTime() - t0, desc))
-          }
-        }
-      })
-    }
-    def drainJobs(): Unit = if (sys.env.contains("GRAFT_JOB_DEBUG")) {
+    })
+    def drainJobs(): Unit = {
       val jobs = jobLog.toArray(Array.empty[(Int, Long, String)]).sortBy(_._1)
       jobs.foreach { case (id, ns, desc) =>
         println(f"  JOB $id%4d ${ns / 1e9}%7.3f s  $desc")
@@ -61,23 +57,30 @@ object BenchExtra {
     drainJobs()
     val qs = graft.SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => filter.forall(f => f.exists(n.startsWith)) }
-    val results = qs.map { case (name, fn) =>
-      val samples = (1 to repeats).map { _ =>
+    val runs = qs.map { case (name, fn) =>
+      def once(): Option[Double] = {
         spark.sparkContext.setJobDescription(name)
         val t0 = System.nanoTime()
-        val n = try fn(spark, dir).count() catch { case _: Throwable => -1L }
+        val rows = try Right(fn(spark, dir).count()) catch { case e: Throwable => Left(e) }
         val s = (System.nanoTime() - t0) / 1e9
         graft.plans.Caches.flush()
-        println(f"BENCH_EXTRA $name rows=$n secs=$s%.3f")
+        rows match {
+          case Right(n) => println(f"BENCH_EXTRA $name rows=$n secs=$s%.3f")
+          case Left(e) =>
+            println(s"BENCH_EXTRA $name FAILED ${e.toString.linesIterator.next()}")
+        }
         drainJobs()
-        s
+        rows.toOption.map(_ => s)
       }
-      name -> samples
+      name -> Iterator.continually(once()).take(repeats)
+        .takeWhile(_.isDefined).flatten.toList
     }
+    val (results, failed) = runs.partition(_._2.size == repeats)
     println("BENCH_EXTRA_SUMMARY " + results.map { case (n, ss) =>
       f"$n:min=${ss.min}%.3f"
     }.mkString(" "))
     println(f"BENCH_EXTRA_TOTAL_MIN ${results.map(_._2.min).sum}%.3f")
     spark.stop()
+    if (failed.nonEmpty) sys.exit(1)
   }
 }

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /**
  * Dump `.explain("formatted")` for one or more SparkEntry queries to
  * files — the plan evidence the optimization rounds commit under
@@ -16,13 +14,8 @@ object PlanDump {
     val suffix = args(1)
     val names = args(2).split(",").map(_.trim)
     val dir = if (args.length > 3) args(3) else "/root/testdata/sf0.1"
-    val spark = SparkSession.builder().master("local[32]")
-      .appName("graft-plan-dump")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // 32 cores, as the committed `plans/r07` dumps were taken
+    val spark = graft.Bench.session(32)
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     names.foreach { prefix =>
       val (name, fn) = graft.SparkEntry.queries.toSeq.sortBy(_._1)

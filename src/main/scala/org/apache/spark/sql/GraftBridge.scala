@@ -11,10 +11,6 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 object GraftBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
-  /** DataFrame from a custom LogicalPlan (classic.Dataset.ofRows is sql-private). */
-  def ofRows(spark: SparkSession,
-             plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): DataFrame =
-    classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
   /**
    * Drop the `originStats` a checkpointed frame's [[execution.LogicalRDD]]

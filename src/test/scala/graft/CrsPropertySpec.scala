@@ -1,7 +1,8 @@
 package graft
 
+import org.apache.spark.sql.functions.{col, lit}
 import org.scalatest.funsuite.AnyFunSuite
-import graft.operators.Epsg
+import graft.operators.{Epsg, PolarStereo, Utm}
 
 /**
  * Registry-wide CRS round-trip property suite (the q82 edge-probe
@@ -17,7 +18,7 @@ import graft.operators.Epsg
  * Snyder truncation; datum-shifted chains (27700) add the Helmert
  * negation-inverse cross terms (~1e-6 deg ~ 10 cm).
  */
-class CrsPropertySpec extends AnyFunSuite {
+class CrsPropertySpec extends AnyFunSuite with SparkSpec {
 
   private def rng = new scala.util.Random(42)
 
@@ -120,5 +121,24 @@ class CrsPropertySpec extends AnyFunSuite {
     sweep(2193, Seq(-45.0, -38.0), 167.0, 179.0)
     sweep(2154, Seq(42.0, 48.0), -5.0, 9.0)
     sweep(5070, Seq(30.0, 45.0), -124.0, -67.0)
+  }
+
+  test("CrsPoint vs the ColAr tree on a NaN northing: the atan2 branches split") {
+    // A NaN northing drives the EPSG:3413 inverse to NaN. CrsPoint runs
+    // the DblAr series, where `gt` is Java `>` (NaN > 0 is false), so
+    // the composed atan2 falls through to its b == 0 axis branch and
+    // returns a FINITE longitude. The ColAr tree (and the SQL twin)
+    // branch on Spark GreaterThan (NaN > 0 is true) and return NaN.
+    val t = Epsg.toLonLat(3413)
+    val p = PolarStereo.Epsg3413
+    val df = spark.range(1).select(lit(1000.0).as("x"), lit(Double.NaN).as("y"))
+    val Array(r) = df.select(
+      t.sourceX(col("x"), col("y")), t.sourceY(col("x"), col("y")),
+      PolarStereo.invLonLat(col("x"), col("y"), p)(Utm.ColAr)._1,
+      PolarStereo.invLonLat(col("x"), col("y"), p)(Utm.ColAr)._2).collect()
+    val (lonD, latD) = PolarStereo.invLonLat(1000.0, Double.NaN, p)(Utm.DblAr)
+    assert(r.getDouble(0) === lonD && math.abs(lonD - 45.0) < 1e-9, s"CrsPoint lon $r")
+    assert(r.getDouble(1).isNaN && latD.isNaN)
+    assert(r.getDouble(2).isNaN && r.getDouble(3).isNaN, s"ColAr $r")
   }
 }

@@ -121,30 +121,4 @@ class ExtensionsSpec extends AnyFunSuite {
       assert(child >= parent && child <= hi, s"res=$res child=$child outside envelope")
     }
   }
-
-  test("whole-operator PipAssignPlan: custom exec in the physical plan, results == expression path") {
-    import graft.operators.SpatialJoin
-    import graft.sources.{Fixtures, Pages}
-    val pages = Pages.withIdPoint(
-      Pages.fromDocuments(spark, "/root/testdata/sf0.001"), "doc_id")
-      .select("doc_id", "lon", "lat")
-    val viaPlan = SpatialJoin.assignPlan(pages, "lon", "lat", Fixtures.Polys)
-    // physical nodeName strips the Exec suffix: the custom node prints as
-    // "PipAssign". String-match the plan tree rather than exists(): once
-    // the plan holds an Exchange, AQE wraps it in AdaptiveSparkPlanExec
-    // and the custom exec sits inside the adaptive plan, where a
-    // top-level exists() cannot see it.
-    val planStr = viaPlan.queryExecution.executedPlan.toString
-    assert(planStr.contains("PipAssign"), planStr.take(400))
-    val a = viaPlan.select("doc_id", "poly_id").collect()
-      .map(r => r.getLong(0) -> r.getInt(1)).toMap
-    val b = SpatialJoin.assign(pages, org.apache.spark.sql.functions.col("lon"),
-        org.apache.spark.sql.functions.col("lat"), Fixtures.Polys)
-      .select("doc_id", "poly_id").collect()
-      .map(r => r.getLong(0) -> r.getInt(1)).toMap
-    assert(a === b)
-    // downstream ops compose: filter + agg over the custom node's output
-    assert(viaPlan.where(org.apache.spark.sql.functions.col("poly_id") >= 0).count() ===
-      b.values.count(_ >= 0))
-  }
 }

@@ -3,9 +3,10 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared session: one per suite (lazy), local[4], small shuffle fan-out. */
+/** Shared session: `Bench.session(4)` (getOrCreate, so every suite in
+  * the JVM gets the same one), local[4], small shuffle fan-out. */
 trait SparkSpec { self: AnyFunSuite =>
-  lazy val spark: SparkSession = SparkSpec.session
+  lazy val spark: SparkSession = Bench.session(4)
   def sf(name: String) = s"/root/testdata/sf0.001"
 
   /** Runs `body` under the iterative operators' local-finish bound
@@ -16,19 +17,5 @@ trait SparkSpec { self: AnyFunSuite =>
     val prev = spark.conf.getOption(key)
     spark.conf.set(key, rows)
     try body finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
-  }
-}
-
-object SparkSpec {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
   }
 }
